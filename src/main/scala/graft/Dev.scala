@@ -107,94 +107,6 @@ object Dev {
           graft.dedup.DedupOps.containmentPairsOf(c, eager = false)
             .select("id_a", "id_b", "containment", "jaccard")
             .orderBy("id_a", "id_b")
-        }),
-        // Plan-evidence reconstructions (r21 optimization round; kept so
-        // the committed plans/r21 d22 cached-shape files stay
-        // regenerable): the shipped operator checkpoints eagerly and
-        // unpersists in a finally, so neither the registry plan nor the
-        // eager=false plan can SHOW the live cache the change is about.
-        // r21-shape WITH LIVE CACHE: phase-2 text joins read the
-        // (doc_id, text, hs) InMemoryRelation — the plan evidence for
-        // the r21 text-in-cache change (withCacheImpl unpersists before
-        // a lazy capture can print, so the registry plan can't show it)
-        "d22_containment_r21cached" -> ((sp, sf) => {
-          import sp.implicits._
-          import org.apache.spark.sql.functions._
-          import graft.dedup.DedupOps._
-          val corpus = withContainmentPlants(sp, sf)
-          val preC = corpus
-            .select($"doc_id", $"text", hashShinglesU($"text").as("hs"))
-            .persist()
-          val cand = containmentCandidates(preC.select($"doc_id", $"hs"))
-          val iNat = graft.functions.GraftFunctions.sorted_overlap_count($"hs_a", $"hs_b")
-          val winners = cand
-            .join(preC.select($"doc_id".as("id_a"), $"hs".as("hs_a"))
-              .hint("shuffle_hash"), "id_a")
-            .join(preC.select($"doc_id".as("id_b"), $"hs".as("hs_b"))
-              .hint("shuffle_hash"), "id_b")
-            .filter(iNat * 10 >= least(size($"hs_a"), size($"hs_b")).cast("long") * 7)
-            .select($"id_a", $"id_b")
-          val contU = udf { (ta: String, tb: String) =>
-            val sa = shingles(ta); val sb = shingles(tb)
-            val i = sa.intersect(sb).size
-            (i.toDouble / math.min(sa.size, sb.size),
-              i.toDouble / (sa.size + sb.size - i))
-          }
-          winners
-            .join(preC.select($"doc_id".as("id_a"), $"text".as("text_a"))
-              .hint("shuffle_hash"), "id_a")
-            .join(preC.select($"doc_id".as("id_b"), $"text".as("text_b"))
-              .hint("shuffle_hash"), "id_b")
-            .withColumn("cj", contU($"text_a", $"text_b"))
-            .select($"id_a", $"id_b", $"cj._1".as("containment"), $"cj._2".as("jaccard"))
-            .filter($"containment" >= 0.8 && $"jaccard" < 0.6)
-            .orderBy($"id_a", $"id_b")
-        }),
-        // w08 ROUND-BODY reconstructions (r22 one-exchange-per-round
-        // change): the shipped operator checkpoints every round, so the
-        // registry plan is a LogicalRDD scan + sort; these capture ONE
-        // round's composed plan — r21 shape (nodes left join,
-        // un-co-partitioned inputs) vs r22 shape (co-partitioned zip
-        // join, single transpose exchange, no nodes join).
-        "w08_pagerank_r21round" -> ((sp, sf) =>
-          graft.warc.WarcQueries.w08RoundForPlan(sp, sf, r21Shape = true)),
-        "w08_pagerank_r22round" -> ((sp, sf) =>
-          graft.warc.WarcQueries.w08RoundForPlan(sp, sf, r21Shape = false)),
-        // r20-shape reconstruction for the before-plan capture
-        "d22_containment_r20" -> ((sp, sf) => {
-          import sp.implicits._
-          import org.apache.spark.sql.functions._
-          import graft.dedup.DedupOps._
-          val corpus = withContainmentPlants(sp, sf)
-          val pre = corpus.select($"doc_id", hashShinglesU($"text").as("hs"))
-          val doCache = (x: org.apache.spark.sql.DataFrame) => x.persist()
-          locally { val preC = doCache(pre)
-            val cand = containmentCandidates(preC)
-            val iNat = graft.functions.GraftFunctions.sorted_overlap_count($"hs_a", $"hs_b")
-            val winners = cand
-              .join(preC.select($"doc_id".as("id_a"), $"hs".as("hs_a"))
-                .hint("shuffle_hash"), "id_a")
-              .join(preC.select($"doc_id".as("id_b"), $"hs".as("hs_b"))
-                .hint("shuffle_hash"), "id_b")
-              .filter(iNat * 10 >= least(size($"hs_a"), size($"hs_b")).cast("long") * 7)
-              .select($"id_a", $"id_b")
-            val contU = udf { (ta: String, tb: String) =>
-              val sa = shingles(ta); val sb = shingles(tb)
-              val i = sa.intersect(sb).size
-              (i.toDouble / math.min(sa.size, sb.size),
-                i.toDouble / (sa.size + sb.size - i),
-                sa.size.toLong, sb.size.toLong)
-            }
-            winners
-              .join(corpus.select($"doc_id".as("id_a"), $"text".as("text_a"))
-                .hint("shuffle_hash"), "id_a")
-              .join(corpus.select($"doc_id".as("id_b"), $"text".as("text_b"))
-                .hint("shuffle_hash"), "id_b")
-              .withColumn("cj", contU($"text_a", $"text_b"))
-              .select($"id_a", $"id_b", $"cj._1".as("containment"), $"cj._2".as("jaccard"))
-              .filter($"containment" >= 0.8 && $"jaccard" < 0.6)
-              .orderBy($"id_a", $"id_b")
-          }
         }))
       for (n <- qnames) {
         val df = lazyReg.getOrElse(n, SparkEntry.queries(n))(spark, sfDir)

@@ -58,4 +58,19 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Run `body` with the session confs `kvs` set, then put each key back
+    * as it was: its prior value, or unset if it was unset. The restore
+    * also runs when `body` throws. The overrides are session-global
+    * while `body` runs, so a query planned concurrently on the same
+    * session sees them (SURVEY.md: the serial-session assumption). */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll
+    val prior = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

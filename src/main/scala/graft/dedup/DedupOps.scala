@@ -870,80 +870,63 @@ object DedupOps {
       .crossJoin(normHits.agg(count(lit(1)).as("n_norm_contaminated")))
   }
 
-  /** d06: dedup CLUSTERING — the step that turns pair emission (d02/d04)
-    * into an actionable keep/drop decision: connected components over the
-    * confirmed near-dup pairs (consumed from the session's
-    * [[ensureVerifiedPairs]] artifact — built on first use, reused by
-    * d16), one keeper (min id) per component. The driver loop runs one
-    * action per round to test convergence — the standard shape for
-    * iterative algorithms (this is iteration control, not data
-    * movement; each round's data work is two shuffle joins).
-    * Oracle: DuckDB recursive CTE computing the same components. */
   /** Connected components over an undirected pair list `(id_a, id_b)` →
-    * `(id, label)` with label = the component's min id.
+    * `(id, label)` with label = the component's min id, one [[ccRound]]
+    * per [[graft.Rounds]] round.
     *
-    * Each round is (1) min-label exchange — every node adopts the
-    * smallest label among itself and its neighbors — followed by
-    * (2) one pointer-jumping hop — `label ← label(label)` — which
-    * SHORT-CIRCUITS label chains: a plain exchange-only loop needs
-    * O(diameter) rounds (a 25-hop path would exceed maxRounds=20 and,
-    * before this fix, exit SILENTLY with wrong labels), while the added
-    * hop at least doubles propagation distance per round, giving
-    * O(log diameter) rounds — the same doubling large-star/small-star
-    * achieves. The hop is safe: a node's label is always the id of some
-    * node in its own component (labels only ever move along edges), so
-    * `label(label)` stays in-component and is monotonically ≤.
-    * If the round cap is STILL hit while labels are changing, this
-    * throws — wrong cluster labels must never leave silently (same
-    * no-silent-truncation contract as the LSH bucket guard). */
+    * The loop converges when a round changes no label; that count rides
+    * each round's checkpoint as an observe metric. If the round cap is
+    * reached while labels are still changing, this throws: wrong cluster
+    * labels never leave silently (the same no-silent-truncation contract
+    * as the LSH bucket guard). */
   private[graft] def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
     val edges = pairs
       .unionByName(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .localCheckpoint(true)
-    val nodes = edges.select(col("id_a").as("id")).distinct()
-    var labels = nodes.select(col("id"), col("id").as("label")).localCheckpoint(true)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "id_b")
-          .withColumnRenamed("label", "nbr_label"), "id_b")
-        .groupBy(col("id_a").as("id")).agg(min(col("nbr_label")).as("nbr_label"))
-      val exchanged = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"),
-          (col("nbr_label") < col("label")).as("chg"))
-      // pointer-jumping: label ← label's own current label (min-kept);
-      // self-labeled roots join to themselves, so the left join always hits
-      //
-      // Convergence count rides the checkpoint pass as an observe metric
-      // (guide §5, driver job floor): the eager localCheckpoint is
-      // already an action over every row, so a separate filter(chg)
-      // .count() job per round only re-scanned the checkpointed blocks
-      // to compute a number the checkpoint pass had already seen.
-      // count(when(chg, 1)) ≡ the former filter-count (null/false chg
-      // rows excluded) and `count` is never null even on an empty frame.
-      val obs = new org.apache.spark.sql.Observation()
-      val next = exchanged
-        .join(labels.select(col("id").as("label"), col("label").as("ll")),
-          Seq("label"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("ll"), col("label"))).as("label"),
-          (col("chg") || col("ll") < col("label")).as("chg"))
-        .observe(obs, count(when(col("chg"), lit(1))).as("changed"))
-        .localCheckpoint(true)
-      changed = obs.get("changed").asInstanceOf[Long]
-      labels = next.select(col("id"), col("label"))
-      rounds += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds " +
-          s"($changed labels still changing) — raise maxRounds; refusing to " +
-          "return wrong cluster labels silently")
-    labels
+    val init = edges.select(col("id_a").as("id")).distinct()
+      .select(col("id"), col("id").as("label")).localCheckpoint(true)
+    val labels = try graft.Rounds.iterate("connectedComponents", init, maxRounds,
+        metrics = Seq("changed" -> count(when(col("chg"), lit(1)))),
+        converged = _("changed") == 0, mustConverge = true) { l =>
+      Some(ccRound(edges, l.select(col("id"), col("label"))))
+    } finally graft.Rounds.release(edges)
+    labels.select(col("id"), col("label"))
   }
 
+  /** One CC round over the symmetric `edges` and the current `(id,
+    * label)` → `(id, label, chg)`: (1) min-label exchange, every node
+    * adopts the smallest label among itself and its neighbors, then
+    * (2) one pointer-jumping hop, `label ← label(label)`. A plain
+    * exchange-only loop needs O(diameter) rounds; the hop at least
+    * doubles the propagation distance per round, giving O(log diameter)
+    * rounds, as large-star/small-star does. The hop is safe: a label is
+    * always the id of a node in its own component (labels only move
+    * along edges), so `label(label)` stays in-component and never
+    * increases. Self-labeled roots join to themselves, so the hop's
+    * left join always hits. */
+  private[graft] def ccRound(edges: DataFrame, labels: DataFrame): DataFrame = {
+    val neighborMin = edges
+      .join(labels.withColumnRenamed("id", "id_b")
+        .withColumnRenamed("label", "nbr_label"), "id_b")
+      .groupBy(col("id_a").as("id")).agg(min(col("nbr_label")).as("nbr_label"))
+    val exchanged = labels.join(neighborMin, Seq("id"), "left")
+      .select(col("id"),
+        least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"),
+        (col("nbr_label") < col("label")).as("chg"))
+    exchanged
+      .join(labels.select(col("id").as("label"), col("label").as("ll")),
+        Seq("label"), "left")
+      .select(col("id"),
+        least(col("label"), coalesce(col("ll"), col("label"))).as("label"),
+        (col("chg") || col("ll") < col("label")).as("chg"))
+  }
+
+  /** d06: dedup CLUSTERING — the step that turns pair emission (d02/d04)
+    * into an actionable keep/drop decision: connected components over the
+    * confirmed near-dup pairs (consumed from the session's
+    * [[ensureVerifiedPairs]] artifact — built on first use, reused by
+    * d16), one keeper (min id) per component.
+    * Oracle: DuckDB recursive CTE computing the same components. */
   def d06_dedup_clusters(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val pairs = ensureVerifiedPairs(s, d).select($"id_a", $"id_b")

@@ -40,7 +40,7 @@ private[graft] final class PairCache(capacity: Int = 2) {
         val it = map.entrySet().iterator()
         val evicted = it.next()
         it.remove()
-        pendingRelease.foreach(PairCache.release)
+        pendingRelease.foreach(graft.Rounds.release)
         pendingRelease = Some(evicted.getValue)
       }
       df
@@ -51,17 +51,6 @@ private[graft] final class PairCache(capacity: Int = 2) {
 }
 
 private[graft] object PairCache {
-  /** Unpersist the checkpointed RDD blocks behind an evicted frame now.
-    * A localCheckpoint'd DataFrame's plan is a LogicalRDD over the
-    * persisted RDD; dropping the map reference alone would leave the
-    * blocks to the ContextCleaner's GC cadence. */
-  private[graft] def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** The evicted-or-not probe the eviction spec asserts on. */
   private[graft] def isReleased(df: DataFrame): Boolean =
     df.queryExecution.analyzed.collect {

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.withConf
 import graft.analytics.Tables
 import SimilarityOps.{lloydStep, coarseAssignU, probeUdf, s01_ann_bruteforce,
   annRecall, annRecallRollup}
@@ -185,21 +186,18 @@ object AnnStore {
       .select(col("vec_id"), col("embedding"), col("cid"), col("code"))
   }
 
-  /** Run `body` with auto-bucketed-scan OFF (save/restore): the planner's
-    * heuristic drops bucketed reading when no join exploits the
-    * clustering — which also drops BUCKET PRUNING, the thing the s07
-    * probe is built on (a broadcast probe join never "exploits"
-    * partitioning, so the heuristic would re-read all k buckets). */
-  private[graft] def withBucketedScan[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prior = s.conf.get(key)
-    s.conf.set(key, "false")
-    try body finally s.conf.set(key, prior)
-  }
+  /** Auto-bucketed-scan OFF, set around every store probe with
+    * [[graft.GraftSession.withConf]]: the planner's heuristic drops
+    * bucketed reading when no join exploits the clustering — which also
+    * drops BUCKET PRUNING, the thing the s07 probe is built on (a
+    * broadcast probe join never "exploits" partitioning, so the
+    * heuristic would re-read all k buckets). */
+  private[graft] val BucketedScan =
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false"
 
   /** The probe plan PlanSpec pins: inverted lists filtered to the named
     * clusters (bucket-pruned scan — only nprobe of k buckets are READ;
-    * plan under [[withBucketedScan]]) joined to the broadcast query
+    * plan under [[BucketedScan]]) joined to the broadcast query
     * set. No Exchange anywhere: the store side is a pruned co-located
     * scan, the query side is broadcast-sized by construction. */
   private[graft] def storeProbe(s: SparkSession, tbl: String,
@@ -236,7 +234,7 @@ object AnnStore {
     val total = emb.count()
     // annRecall is eager (withCache checkpoints), so the bucketed-scan
     // override covers the probe's actual execution
-    withBucketedScan(s) {
+    withConf(s, BucketedScan) {
       annRecall(s, d, storeProbe(s, tbl, queries, probedCids), total)
     }
   }
@@ -275,7 +273,7 @@ object AnnStore {
       .collect().map(_.getInt(0)).toSeq.sorted
     val total = emb.count()
     val topk = udaf(new TopKCosine(5))
-    withBucketedScan(s) {
+    withConf(s, BucketedScan) {
       val approx = s08ProbePlan(s, Seq(tbl), queries, probedCids)
         .filter($"vec_id" =!= $"query_id")
         .withColumn("score", adcU($"q_v", $"code"))
@@ -323,7 +321,7 @@ object AnnStore {
     val total = emb.count()
     val topkR = udaf(new TopKCosine(rerank))
     val topk5 = udaf(new TopKCosine(5))
-    withBucketedScan(s) {
+    withConf(s, BucketedScan) {
       // stage 1 — codes-only nomination (the exact s08 probe plan)
       val adcTop = s08ProbePlan(s, Seq(tbl), queries, probedCids)
         .filter($"vec_id" =!= $"query_id")
@@ -395,7 +393,7 @@ object AnnStore {
       .collect().map(_.getInt(0)).toSeq.sorted
     val topkR = udaf(new TopKCosine(rerank))
     val topkOut = udaf(new TopKCosineScored(topK))
-    withBucketedScan(s) {
+    withConf(s, BucketedScan) {
       val adcTop = s08ProbePlan(s, tbls,
           queries.select($"query_id", $"q_v", $"cid"), probedCids)
         .withColumn("score", adcU($"q_v", $"code"))

@@ -85,21 +85,6 @@ object SelectOps {
     math.floor((1.0 - cos) * 4294967296.0).toLong
   }
 
-  /** The checkpointed RDD backing an eagerly-localCheckpointed frame —
-    * the handle needed to RELEASE a round's blocks the moment the next
-    * round's frame is materialized. Without the explicit unpersist the
-    * ContextCleaner only reclaims blocks on driver GC, so at T rounds a
-    * corpus-sized working set could hold up to T corpus-sized block sets
-    * in flight; with it, never more than 2 (previous + freshly built).
-    * Safe because a released round's frame is never read again (its
-    * successor subsumes it), and localCheckpoint's default storage level
-    * is MEMORY_AND_DISK so a live round spills rather than OOMs. */
-  private def backingRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-      case _ => None
-    }
-
   /** Exact distributed k-center greedy over `emb` (`vec_id`,
     * `embedding`): T picks, lowest-id seed, (dist desc, vec_id) argmax
     * order. Returns (rank, vec_id, min_dist_fp) with the seed carrying
@@ -120,39 +105,23 @@ object SelectOps {
     var picks = Vector[(Long, Long)]((seedId, -1L))
 
     // working frame: survivors only, with the running min-distance to
-    // the selected set. Each round's update is materialized with an
-    // EAGER localCheckpoint, which truncates the logical plan to the
-    // checkpointed RDD — without it the lineage nests one
-    // Filter+Project layer per round and Catalyst's constraint
-    // propagation over the ~T-deep alias chain goes combinatorial
-    // (observed: the driver pinned in analysis for minutes at T = 32
-    // on 500 rows). Each superseded round's blocks are released
-    // EXPLICITLY (see backingRdd) so at most 2 corpus-sized block sets
-    // are ever in flight; the materializing pass is also the round's
-    // one corpus scan and one distance evaluation per vector.
-    var work = emb.filter($"vec_id" =!= seedId)
+    // the selected set, one graft.Rounds round per pick. A round's
+    // checkpoint is its one corpus scan and one distance evaluation per
+    // vector; the 1-row argmax collect reads the previous round.
+    val init = emb.filter($"vec_id" =!= seedId)
       .select($"vec_id", $"embedding", distQ(seedVec)($"embedding").as("mind"))
       .localCheckpoint(true)
-    var done = false
-    for (_ <- 2 to T if !done) {
-      val top = work.orderBy($"mind".desc, $"vec_id").limit(1).collect()
-      if (top.isEmpty) done = true // corpus smaller than the budget
-      else {
-        val pick = top(0)
+    val last = graft.Rounds.iterate("greedySelect", init, T - 1) { work =>
+      // None once the corpus is smaller than the budget
+      work.orderBy($"mind".desc, $"vec_id").limit(1).collect().headOption.map { pick =>
         picks :+= ((pick.getLong(0), pick.getLong(2)))
         val newest = pick.getSeq[Float](1).toArray
-        val updated = work.filter($"vec_id" =!= pick.getLong(0))
+        work.filter($"vec_id" =!= pick.getLong(0))
           .select($"vec_id", $"embedding",
             least($"mind", distQ(newest)($"embedding")).as("mind"))
-          .localCheckpoint(true)
-        // the new round is materialized — release the previous round's
-        // blocks NOW (see backingRdd: bounds the in-flight working-set
-        // storage at 2 corpus-sized block sets for the whole traversal)
-        backingRdd(work).foreach(_.unpersist(blocking = false))
-        work = updated
       }
     }
-    backingRdd(work).foreach(_.unpersist(blocking = false)) // last round
+    graft.Rounds.release(last)
     s.createDataFrame(picks.zipWithIndex.map { case ((id, fp), i) =>
       (i + 1, id, fp)
     }).toDF("rank", "vec_id", "min_dist_fp")
@@ -265,7 +234,7 @@ object SelectOps {
     val out = greedySelect(s, candFrame, T)
     // the result is driver-built (createDataFrame over the collected
     // picks) — the candidate blocks are dead; release them eagerly
-    backingRdd(candFrame).foreach(_.unpersist(blocking = false))
+    graft.Rounds.release(candFrame)
     if (overflow.value > 0)
       org.slf4j.LoggerFactory.getLogger("graft.sim").warn(
         s"s11b: ${overflow.value} member(s) of over-cap cluster(s) excluded " +

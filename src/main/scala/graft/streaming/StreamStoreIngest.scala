@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import StreamingOps.{withStreamShuffle, drainToParquet}
+import graft.GraftSession.withConf
+import StreamingOps.{StreamShuffle, drainToParquet}
 
 /** The STREAMING STORE-INGEST twins (st08/st09), split out of
   * StreamingOps (r9 verdict item 4: per-family files, unchanged query
@@ -41,7 +42,7 @@ object StreamStoreIngest {
     }
 
   private[graft] def st08_stream_store_dedup_files(s: SparkSession, d: String,
-      dir: String): DataFrame = withStreamShuffle(s) {
+      dir: String): DataFrame = withConf(s, StreamShuffle) {
     val (bandT, digT) = graft.dedup.IncrementalDedup.ensureIncrementalStore(s, d)
     val docsSchema = StructType(Seq(
       StructField("doc_id", LongType),
@@ -146,7 +147,7 @@ object StreamStoreIngest {
   private[graft] def st09Impl(s: SparkSession, d: String,
       compactAtDeltaRows: Long, baseOverride: Option[String] = None)
       : DataFrame =
-    withStreamShuffle(s) {
+    withConf(s, StreamShuffle) {
       import s.implicits._
       import graft.sim.AnnStore
       val (shared, cb, pqCb) = AnnStore.ensureAnnStore(s, d)
@@ -244,7 +245,7 @@ object StreamStoreIngest {
     }
 
   private[graft] def p03_warc_stream_pipeline_files(s: SparkSession,
-      d: String, dir: String): DataFrame = withStreamShuffle(s) {
+      d: String, dir: String): DataFrame = withConf(s, StreamShuffle) {
     import s.implicits._
     val (bandT, digT) = graft.dedup.IncrementalDedup.ensureIncrementalStore(s, d)
     // the crawl carries NOVEL pages beside the recrawled surface — the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.GraftSession.withConf
 import graft.dedup.Contamination
 
 /** Structured Streaming surface over the `events` table.
@@ -38,21 +39,14 @@ object StreamingOps {
         .option("pathGlobFilter", "events.parquet").parquet(d))
   }
 
-  /** Run `body` with streaming-sized shuffle parallelism, then restore the
-    * caller's ACTUAL prior value. Each shuffle partition carries an
+  /** Streaming-sized shuffle parallelism, set around each stream with
+    * [[graft.GraftSession.withConf]]. Each shuffle partition carries an
     * HDFS-backed state store whose per-batch checkpoint I/O dominates
     * these small stateful queries; 8 stores is plenty for the testdata
     * volumes (a production stream would size this to its key
     * cardinality). Streaming plans capture the value at `start()`, so the
-    * override must span query construction through `awaitTermination`.
-    * The restore is save/restore, not a reset to the GraftSession
-    * default — the r4 shape clobbered any caller-set value in a shared
-    * session. */
-  private[streaming] def withStreamShuffle[T](s: SparkSession)(body: => T): T = {
-    val prior = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prior)
-  }
+    * override spans query construction through `awaitTermination`. */
+  private[streaming] val StreamShuffle = "spark.sql.shuffle.partitions" -> "8"
 
   /** Production drain (r5 verdict item 5): every st0x memory sink
     * materializes its results on the DRIVER, which is fine for the
@@ -132,7 +126,7 @@ object StreamingOps {
       dir: String): DataFrame = st01Impl(s, d, fileDrainDir = Some(dir))
 
   private def st01Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
+      fileDrainDir: Option[String]): DataFrame = withConf(s, StreamShuffle) {
     val agg = streamEvents(s, d)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -187,7 +181,7 @@ object StreamingOps {
     * written from the executors); the per-user rollup happens on the
     * read-back, batch-side. Hash-equal to the batch path (spec-pinned). */
   private[graft] def st02_session_window_files(s: SparkSession, d: String,
-      dir: String): DataFrame = withStreamShuffle(s) {
+      dir: String): DataFrame = withConf(s, StreamShuffle) {
     val sessions = streamEvents(s, d)
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
@@ -239,7 +233,7 @@ object StreamingOps {
       dir: String): DataFrame = st03Impl(s, d, fileDrainDir = Some(dir))
 
   private def st03Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
+      fileDrainDir: Option[String]): DataFrame = withConf(s, StreamShuffle) {
     val ev = streamEvents(s, d)
     val agg = ev.union(ev)
       .dropDuplicates("event_id")
@@ -283,7 +277,7 @@ object StreamingOps {
       dir: String): DataFrame = st04Impl(s, d, fileDrainDir = Some(dir))
 
   private def st04Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
+      fileDrainDir: Option[String]): DataFrame = withConf(s, StreamShuffle) {
     val ev = streamEvents(s, d)
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
@@ -417,7 +411,7 @@ object StreamingOps {
       dir: String): DataFrame = st06Impl(s, d, fileDrainDir = Some(dir))
 
   private def st06Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
+      fileDrainDir: Option[String]): DataFrame = withConf(s, StreamShuffle) {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val ev = streamEvents(s, d)
@@ -535,7 +529,7 @@ object StreamingOps {
   }
 
   private def st05Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
+      fileDrainDir: Option[String]): DataFrame = withConf(s, StreamShuffle) {
     withStagedWarcStream(s, d, "st05") { staged =>
       val records = graft.warc.WarcSource.fromBytes(staged)
       val agg = graft.warc.Pipeline.urlResources(records)
@@ -589,7 +583,7 @@ object StreamingOps {
       dir: String): DataFrame = st07Impl(s, d, fileDrainDir = Some(dir))
 
   private def st07Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
+      fileDrainDir: Option[String]): DataFrame = withConf(s, StreamShuffle) {
     val docsSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType),
@@ -704,7 +698,7 @@ object StreamingOps {
 
   private def st10Impl(s: SparkSession, d: String,
       fileDrainDir: Option[String], benchVecs: DataFrame): DataFrame =
-      withStreamShuffle(s) {
+      withConf(s, StreamShuffle) {
     // band geometry referenced from the batch operator's constants —
     // st10 IS d21 as admission, so the two cannot desynchronize
     // (r17 ADVICE; the oracle SQL still states the literals)
@@ -883,7 +877,7 @@ object StreamingOps {
 
   private def st11Impl(s: SparkSession, d: String,
       fileDrainDir: Option[String], benchDocs: DataFrame): DataFrame =
-      withStreamShuffle(s) {
+      withConf(s, StreamShuffle) {
     val N = 13
     val docsBatch = s.read
       .option("pathGlobFilter", "documents.parquet").parquet(d)

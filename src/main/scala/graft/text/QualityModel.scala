@@ -119,13 +119,8 @@ object QualityModel {
           lit(wv(0)).as("w0"), lit(wv(1)).as("w1"), lit(wv(2)).as("w2"),
           lit(wv(3)).as("w3"), lit(wv(4)).as("w4"))
         .localCheckpoint(true) // eager result, matching the withCache shape
-      // release the feature blocks NOW (the s11 backingRdd device):
-      // the returned 1-row frame no longer references them
-      f.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
+      // the returned 1-row frame no longer reads the feature blocks
+      graft.Rounds.release(f)
       out
     }
   }

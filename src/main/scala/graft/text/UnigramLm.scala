@@ -28,7 +28,7 @@ import graft.analytics.Tables
   * Shape constants: pieces up to [[MaxPieceLen]] = 4 chars, induction
   * over words up to [[MaxWordLen]] = 12 chars (longer words are
   * excluded and REPORTED — the `long_words_excluded` column, the
-  * no-silent-caps rule), [[Rounds]] = 2 EM rounds, seed floor
+  * no-silent-caps rule), [[EmRounds]] = 2 EM rounds, seed floor
   * [[MinSeedCount]] = 2 with all single chars retained (coverage:
   * every word segments in round 1). Deterministic tie-break at each DP
   * position: highest score, then longest piece.
@@ -62,7 +62,7 @@ object UnigramLm {
   private val Q = 4096.0
   private[graft] val MaxWordLen = 12
   private[graft] val MaxPieceLen = 4
-  private[graft] val Rounds = 2
+  private[graft] val EmRounds = 2
   private val MinSeedCount = 2L
   /** Unreachable-state score: far below any real path score (|qlp| ≤
     * ~60k per piece, ≤ 12 pieces per word ⇒ |qdp| ≤ ~7·10^5). */
@@ -192,12 +192,11 @@ object UnigramLm {
     val seed = sub.groupBy($"piece").agg(sum($"cw").as("c"))
       .filter($"c" >= MinSeedCount || length($"piece") === 1)
     val cands = candidatesOf(words).localCheckpoint(true)
-    var pieces = qlpOf(seed).localCheckpoint(true)
-    for (_ <- 1 to Rounds) {
-      // E: Viterbi recount; M: re-quantize; prune = pieces the
-      // segmentation stopped using simply never re-enter
-      pieces = qlpOf(viterbiCounts(words, cands, pieces))
-        .localCheckpoint(true)
+    // E: Viterbi recount; M: re-quantize; prune = pieces the
+    // segmentation stopped using simply never re-enter
+    val pieces = graft.Rounds.iterate("induceVocab",
+        qlpOf(seed).localCheckpoint(true), EmRounds) { p =>
+      Some(qlpOf(viterbiCounts(words, cands, p)))
     }
     (words, cands, pieces, longCnt)
   }
@@ -247,7 +246,7 @@ object UnigramLm {
     * twin, the t14-to-t11 relationship for the unigram-LM half: every
     * dictionary word is Viterbi-segmented ONE more time under the FINAL
     * pruned vocabulary (round 2's counts came from segmenting under
-    * round 1's probabilities — the shipped tokenizer is p_Rounds, so
+    * round 1's probabilities — the shipped tokenizer is p_EmRounds, so
     * the encode pass is its own DP), and every document rolls up to the
     * metrics tokenizer teams actually track: word counts,
     * long-word exclusions, total pieces (fertility = n_pieces/n_words),
@@ -417,7 +416,7 @@ object UnigramLm {
       |    CAST(floor(4096.0 * ln(CAST(c AS DOUBLE) /
       |      (SELECT CAST(SUM(c) AS DOUBLE) FROM seed))) AS BIGINT) AS qlp
       |  FROM seed),
-      |${(1 to Rounds).map(r => roundCtes(r)).mkString(",\n")}""".stripMargin
+      |${(1 to EmRounds).map(r => roundCtes(r)).mkString(",\n")}""".stripMargin
     val t20 = s"""$prefix
       |SELECT CAST(length(piece) AS BIGINT) AS piece_len,
       |  CAST(COUNT(*) AS BIGINT) AS n_pieces,
@@ -425,8 +424,8 @@ object UnigramLm {
       |  CAST(SUM(qlp) AS BIGINT) AS sum_qlp,
       |  md5(string_agg(piece, ',' ORDER BY piece)) AS vocab_md5,
       |  (SELECT long_words_excluded FROM longw) AS long_words_excluded
-      |FROM p_$Rounds GROUP BY 1 ORDER BY 1""".stripMargin
-    val enc = Rounds + 1
+      |FROM p_$EmRounds GROUP BY 1 ORDER BY 1""".stripMargin
+    val enc = EmRounds + 1
     val t21 = s"""$prefix,
       |${roundCtes(enc, withRecount = false)},
       |seg AS MATERIALIZED (

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{GraftSession, Rounds}
 import graft.analytics.Tables
 import graft.rake.Rake
 
@@ -471,37 +472,71 @@ object WarcQueries {
     * make the last ulp depend on partial-aggregation merge order (the
     * same determinism rule as s04's centroid sums). The quadratic
     * cross-host link gives hosts varying in-degrees, so the stationary
-    * distribution is genuinely non-uniform. Driver loop = iteration
-    * control only; localCheckpoint bounds lineage growth across rounds.
-    * No dangling-mass term is needed: every host links to itself via
-    * /rel, so out-degree ≥ 1 everywhere.
+    * distribution is genuinely non-uniform. No dangling-mass term is
+    * needed: every host links to itself via /rel, so out-degree ≥ 1
+    * everywhere. */
+  def w08_pagerank(spark: SparkSession, d: String): DataFrame =
+    pageRank(hostEdges(spark, d)).orderBy(col("id"))
+
+  /** The w08 loop over an edge list `(src, dst)` → `(id, rank)`, one
+    * [[w08Round]] per [[Rounds]] round.
     *
-    * Round shape (r22, guide §2.4): ONE exchange per round — the
-    * contribution transpose (src-keyed rows re-keyed by dst), which is
-    * the only data movement PageRank fundamentally requires. `el` is
-    * hash-partitioned on src ONCE at a size-derived count and each
-    * round's output lands hash-partitioned on id at the same count (the
-    * checkpoint preserves it), so the rank join zips partitions with no
-    * exchange; AQE coalescing is suspended inside the loop so the
-    * aggregation exchange keeps that count instead of re-coalescing per
-    * round (the count is already size-derived — coalescing could only
-    * break the co-partitioning, not improve it). Map-side partial
-    * aggregation stays on the transpose, so the shuffle carries
-    * near-node-scale partial sums, not edge-scale rows.
+    * Every node must be the dst of some edge (dsts ⊇ srcs): the round
+    * emits one row per dst, with no per-round `nodes` join. The host
+    * graph holds this because every parsed page's /rel self-link plants
+    * the (c, c) edge. Each round's checkpoint observes its row count,
+    * which must equal the node count, so an edge list that breaks the
+    * invariant throws instead of silently dropping src-only nodes.
     *
-    * The former per-round `nodes` LEFT join is dropped as provably
-    * redundant: every node IS the dst of at least one edge — a src is
-    * always a parsed page's own host class, whose /rel self-link plants
-    * the (c, c) edge, so dsts ⊇ srcs and nodes = srcs ∪ dsts = dsts —
-    * hence the contribution aggregate already emits exactly one row per
-    * node and `sumc` is never null. Same rows, same values (oracle
-    * unchanged and re-verified). */
-  /** One PageRank power-iteration round over co-partitioned inputs —
-    * exposed for plan pinning and the committed plan evidence: with `el`
-    * hash-partitioned on src and `ranks` hash-partitioned on id at the
-    * SAME count (both checkpointed, partitioning preserved by
-    * LogicalRDD), the physical plan must contain exactly ONE exchange:
-    * the dst-keyed contribution transpose. */
+    * The loop partition count is derived from the graph: the widest
+    * shuffle carries at most one (dst, contrib) long pair per edge
+    * (~24 B unsafe-row bytes), sized to AQE's advisory partition target.
+    * `el` is hash-partitioned on src and every round lands
+    * hash-partitioned on id at that count, so the rank join zips
+    * partitions and the contribution transpose is the round's one
+    * exchange. AQE is off inside the loop: an AdaptiveSparkPlanExec root
+    * reports UnknownPartitioning to `localCheckpoint`, so the
+    * checkpoint would lose the hash partitioning and every round would
+    * re-shuffle both join sides. Nothing is given up, since the loop's
+    * shuffles are already size-pinned. Node and edge counts ride the
+    * input checkpoints as observe metrics. */
+  private[graft] def pageRank(edgeList: DataFrame): DataFrame = {
+    val spark = edgeList.sparkSession
+    import spark.implicits._
+    val Scale = 1000000000000L
+    val (edges, edgeCount) = Rounds.checkpoint(edgeList, "edges" -> count(lit(1)))
+    val (nodes, nodeCount) = Rounds.checkpoint(
+      edges.select($"src".as("id")).union(edges.select($"dst".as("id"))).distinct(),
+      "nodes" -> count(lit(1)))
+    val n = nodeCount("nodes")
+    val advisory = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val parts = math.max(1L, (edgeCount("edges") * 24L + advisory - 1) / advisory).toInt
+    val deg = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
+    val base = (15L * Scale) / (100L * n)
+    GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString,
+        "spark.sql.adaptive.enabled" -> "false") {
+      val el = edges.join(deg, "src")
+        .repartition(parts, $"src").localCheckpoint(true)
+      val ranks0 = nodes.select($"id", lit(Scale / n).as("rank"))
+        .repartition(parts, $"id").localCheckpoint(true)
+      try Rounds.iterate("pageRank", ranks0, 10,
+          metrics = Seq("rows" -> count(lit(1))),
+          converged = m => {
+            if (m("rows") != n) throw new IllegalStateException(
+              s"pageRank: a round ranked ${m("rows")} of $n nodes; every src " +
+                "must also be a dst (a self-edge per node)")
+            false
+          }) { r => Some(w08Round(el, r, base)) }
+      finally Seq(edges, nodes, el).foreach(Rounds.release)
+    }
+  }
+
+  /** One PageRank power-iteration round. With `el` hash-partitioned on
+    * src and `ranks` hash-partitioned on id at the SAME count (both
+    * checkpointed, partitioning preserved by LogicalRDD), the physical
+    * plan contains exactly ONE exchange: the dst-keyed contribution
+    * transpose, with map-side partial aggregation below it. */
   private[graft] def w08Round(el: DataFrame, ranks: DataFrame,
       base: Long): DataFrame =
     el.join(ranks.select(col("id").as("src"), col("rank").as("r")), "src")
@@ -509,95 +544,6 @@ object WarcQueries {
         expr("(85 * r) div (100 * outdeg)").as("c"))
       .groupBy(col("id")).agg(sum(col("c")).as("sumc"))
       .select(col("id"), (lit(base) + col("sumc")).as("rank"))
-
-  /** Dev-only plan-capture reconstruction of ONE w08 round (committed
-    * plan evidence — the shipped operator checkpoints eagerly, so its
-    * registry plan prints as a bare LogicalRDD scan + sort). `r21Shape`
-    * rebuilds the pre-r22 round body (un-co-partitioned inputs + the
-    * per-round `nodes` left join) over the same checkpointed frames.
-    * The r22 branch leaves the loop's session confs SET so the lazy
-    * explain that follows plans under exactly the planner inputs the
-    * real loop sees (Dev sessions are discarded — nothing to restore). */
-  private[graft] def w08RoundForPlan(spark: SparkSession, d: String,
-      r21Shape: Boolean): DataFrame = {
-    import spark.implicits._
-    val Scale = 1000000000000L
-    val edges = hostEdges(spark, d).localCheckpoint(true)
-    val nodes = edges.select($"src".as("id"))
-      .union(edges.select($"dst".as("id"))).distinct().localCheckpoint(true)
-    val n = nodes.count()
-    val base = (15L * Scale) / (100L * n)
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-    if (r21Shape) {
-      val el = edges.join(deg, "src").localCheckpoint(true)
-      val ranks = nodes.select($"id", lit(Scale / n).as("rank"))
-      val contrib = el
-        .join(ranks.select($"id".as("src"), $"rank".as("r")), "src")
-        .select($"dst".as("id"), expr("(85 * r) div (100 * outdeg)").as("c"))
-        .groupBy($"id").agg(sum($"c").as("sumc"))
-      nodes.join(contrib, Seq("id"), "left")
-        .select($"id", (lit(base) + coalesce($"sumc", lit(0L))).as("rank"))
-    } else {
-      val nEdges = edges.count()
-      val advisory = spark.sessionState.conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-      val parts = math.max(1L, (nEdges * 24L + advisory - 1) / advisory).toInt
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val el = edges.join(deg, "src")
-        .repartition(parts, $"src").localCheckpoint(true)
-      val ranks = nodes.select($"id", lit(Scale / n).as("rank"))
-        .repartition(parts, $"id").localCheckpoint(true)
-      w08Round(el, ranks, base)
-    }
-  }
-
-  def w08_pagerank(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    val Scale = 1000000000000L
-    val edges = hostEdges(spark, d).localCheckpoint(true)
-    val nodes = edges.select($"src".as("id"))
-      .union(edges.select($"dst".as("id"))).distinct().localCheckpoint(true)
-    val n = nodes.count() // iteration constant, not data movement
-    // Size-derived loop partition count (never a local[32] constant):
-    // the loop's widest shuffle is bounded by one (dst, contrib) long
-    // pair per edge (~24 B unsafe-row bytes), sized to AQE's own
-    // advisory partition target — a tiny graph runs the loop in one
-    // partition, a web-scale host graph gets advisory-sized ones.
-    val nEdges = edges.count()
-    val advisory = spark.sessionState.conf.getConf(
-      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    val parts = math.max(1L, (nEdges * 24L + advisory - 1) / advisory).toInt
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-    val base = (15L * Scale) / (100L * n)
-    // AQE is suspended for the loop (save/restore, the withStreamShuffle
-    // idiom): an AdaptiveSparkPlanExec root reports UnknownPartitioning
-    // to Dataset.localCheckpoint, so the checkpointed LogicalRDD would
-    // LOSE the hash partitioning and every round would re-shuffle both
-    // join sides (measured: 3 exchanges/round instead of 1; PlanSpec
-    // pins the zip). Nothing is given up: the loop's shuffles are
-    // already size-pinned to `parts`, so runtime coalescing has nothing
-    // to coalesce, and AQE cannot split aggregation skew anyway.
-    val priorShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val priorAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val finalRanks =
-      try {
-        val el = edges.join(deg, "src")
-          .repartition(parts, $"src").localCheckpoint(true)
-        var ranks = nodes.select($"id", lit(Scale / n).as("rank"))
-          .repartition(parts, $"id").localCheckpoint(true)
-        for (_ <- 1 to 10) {
-          ranks = w08Round(el, ranks, base).localCheckpoint(true)
-        }
-        ranks
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", priorShuffle)
-        spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
-      }
-    finalRanks.orderBy($"id")
-  }
 
   val w08Oracle: String = {
     val graph =

@@ -144,15 +144,29 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** The physical plan under an AQE root, and its shuffle exchanges. */
+  private def exchangesOf(df: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.execution.SparkPlan,
+        Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]) = {
+    val root = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+    (root, root.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    })
+  }
+
   test("w08 round: co-partitioned zip join — exactly one exchange (the " +
       "dst transpose), no nodes join, partial agg kept") {
-    // r22 one-exchange-per-round pagerank: with `el` hash(src, parts)
-    // and `ranks` hash(id, parts) both checkpointed, the round body must
-    // plan a shuffle-free rank join (LogicalRDD preserves the
-    // partitioning), ONE exchange for the dst-keyed contribution
-    // transpose (with map-side partial aggregation below it), and no
-    // per-round nodes join. parts ≠ session shuffle.partitions (4) on
-    // purpose: the zip must come from the inputs' own partitioning.
+    // with `el` hash(src, parts) and `ranks` hash(id, parts) both
+    // checkpointed, the round body must plan a shuffle-free rank join
+    // (LogicalRDD preserves the partitioning), ONE exchange for the
+    // dst-keyed contribution transpose (with map-side partial
+    // aggregation below it), and no per-round nodes join. parts ≠
+    // session shuffle.partitions (4) on purpose: the zip must come from
+    // the inputs' own partitioning.
     val sp = spark
     import sp.implicits._
     val parts = 3
@@ -162,27 +176,17 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fire and the join MUST zip on the inputs' preserved partitioning.
     // AQE OFF as the operator's loop runs it: an AdaptiveSparkPlanExec
     // root reports UnknownPartitioning to Dataset.localCheckpoint, so
-    // the checkpointed LogicalRDD loses the hash partitioning and every
-    // round re-shuffles both join sides (measured: 3 exchanges/round).
-    val priorBc = sp.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val priorAqe = sp.conf.get("spark.sql.adaptive.enabled")
-    sp.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sp.conf.set("spark.sql.adaptive.enabled", "false")
-    val el = Seq((1L, 2L, 2L), (1L, 1L, 2L), (2L, 1L, 1L))
-      .toDF("src", "dst", "outdeg")
-      .repartition(parts, $"src").localCheckpoint(true)
-    val ranks = Seq((1L, 1000L), (2L, 2000L)).toDF("id", "rank")
-      .repartition(parts, $"id").localCheckpoint(true)
-    try {
+    // the checkpointed LogicalRDD would lose the hash partitioning and
+    // every round would re-shuffle both join sides (3 exchanges/round).
+    GraftSession.withConf(sp, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
+      val el = Seq((1L, 2L, 2L), (1L, 1L, 2L), (2L, 1L, 1L))
+        .toDF("src", "dst", "outdeg")
+        .repartition(parts, $"src").localCheckpoint(true)
+      val ranks = Seq((1L, 1000L), (2L, 2000L)).toDF("id", "rank")
+        .repartition(parts, $"id").localCheckpoint(true)
       val df = graft.warc.WarcQueries.w08Round(el, ranks, 7L)
-      val root = df.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case p => p
-      }
-      val exchanges = root.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-      }
+      val (root, exchanges) = exchangesOf(df)
       assert(exchanges.length == 1,
         s"expected exactly the transpose exchange, got ${exchanges.length}:\n$root")
       val joins = root.collect {
@@ -199,22 +203,49 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       // = 425→id2, 425+1700→id1, plus base 7
       val out = df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(out == Map(1L -> 2132L, 2L -> 432L))
-    } finally {
-      sp.conf.set("spark.sql.autoBroadcastJoinThreshold", priorBc)
-      sp.conf.set("spark.sql.adaptive.enabled", priorAqe)
+    }
+  }
+
+  test("cc round: six exchanges per round") {
+    // one connected-components round as the loop plans it (session AQE,
+    // checkpointed inputs with no partitioning of their own): both sides
+    // of the neighbor join, the min-label aggregate (whose output already
+    // sits hash-partitioned on id), the labels side of the exchange join,
+    // and both sides of the pointer-hop join on label. Auto-broadcast is
+    // off as in the w08 pin: at scale no side is broadcast-sized.
+    val sp = spark
+    import sp.implicits._
+    GraftSession.withConf(sp, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+      val edges = pairs.unionByName(pairs.select($"id_b".as("id_a"), $"id_a".as("id_b")))
+        .localCheckpoint(true)
+      val labels = edges.select($"id_a".as("id")).distinct()
+        .select($"id", $"id".as("label")).localCheckpoint(true)
+      val df = graft.dedup.DedupOps.ccRound(edges, labels)
+      val (root, exchanges) = exchangesOf(df)
+      val ccExchanges = 6
+      assert(exchanges.length == ccExchanges,
+        s"expected $ccExchanges exchanges per CC round, got ${exchanges.length}:\n$root")
+      // one min-label exchange plus one pointer hop over the identity
+      val out = df.collect().map(r => (r.getLong(0), (r.getLong(1), r.getBoolean(2)))).toMap
+      assert(out == Map(1L -> (1L, false), 2L -> (1L, true), 3L -> (2L, true),
+        10L -> (10L, false), 11L -> (10L, true)))
     }
   }
 
   test("w08 pagerank: loop session-conf overrides are restored") {
     requireTable("documents")
     val sp = spark
-    val before = (sp.conf.get("spark.sql.shuffle.partitions"),
-      sp.conf.get("spark.sql.adaptive.coalescePartitions.enabled"))
+    // the two keys the loop overrides, read as set values (None = unset)
+    def confs = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+      .map(k => k -> sp.conf.getAll.get(k))
+    val before = confs
+    assert(before == Seq("spark.sql.shuffle.partitions" -> Some("4"),
+      "spark.sql.adaptive.enabled" -> Some("true")),
+      s"the loop's overrides must differ from the session's: $before")
     val out = graft.warc.WarcQueries.w08_pagerank(sp, sf).collect()
     assert(out.nonEmpty)
-    val after = (sp.conf.get("spark.sql.shuffle.partitions"),
-      sp.conf.get("spark.sql.adaptive.coalescePartitions.enabled"))
-    assert(after == before, s"loop leaked session confs: $before -> $after")
+    assert(confs == before, s"loop leaked session confs: $before -> $confs")
   }
 
   test("t05 repetition: built-in expressions only, no UDF in the plan") {
@@ -239,13 +270,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.bucketBy(8, "k").sortBy("k").saveAsTable("graft_bkt_b")
     // force the shuffle-join path: a broadcast would also be exchange-ish
     // and wouldn't demonstrate co-location
-    sp.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(sp, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = sp.table("graft_bkt_a").join(sp.table("graft_bkt_b"), "k")
       val plan = physical(j)
       assert(!plan.contains("Exchange"), s"bucketed join shuffled:\n$plan")
       assert(j.count() > 0)
-    } finally sp.conf.set("spark.sql.autoBroadcastJoinThreshold", (1 << 20).toString)
+    }
   }
 
   test("d02/d04: verify margin runs the native overlap kernel in-plan") {
@@ -284,8 +314,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     sp.sql("DROP TABLE IF EXISTS graft_sigstore_spec")
     val docs = graft.analytics.Tables.documents(sp, sf).select($"doc_id", $"text")
     graft.dedup.IncrementalDedup.writeSignatureStore(sp, docs, "graft_sigstore_spec")
-    sp.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try GraftSession.withConf(sp, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val newBands = docs.filter($"doc_id" % 31 === 0)
         .select(($"doc_id" + 300000L).as("id_b"),
           posexplode(graft.dedup.DedupOps.minhashBandsU($"text"))
@@ -298,10 +327,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(plan.contains("Bucketed: true") || plan.contains("SelectedBucketsCount"),
         s"store scan lost its bucketing:\n$plan")
       assert(j.count() > 0)
-    } finally {
-      sp.conf.set("spark.sql.autoBroadcastJoinThreshold", (1 << 20).toString)
-      sp.sql("DROP TABLE IF EXISTS graft_sigstore_spec")
-    }
+    } finally sp.sql("DROP TABLE IF EXISTS graft_sigstore_spec")
   }
 
   test("d10 composed ingest: store probes read co-located, corpus never re-signed") {
@@ -341,7 +367,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         $"embedding".as("q_emb"),
         org.apache.spark.sql.functions.explode(
           org.apache.spark.sql.functions.lit(probed.toArray)).as("cid"))
-    graft.sim.AnnStore.withBucketedScan(sp) {
+    GraftSession.withConf(sp, graft.sim.AnnStore.BucketedScan) {
       val df = graft.sim.AnnStore.storeProbe(sp, tbl, q0, probed)
       val plan = physical(df)
       val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
@@ -370,7 +396,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         $"embedding".as("q_v"),
         org.apache.spark.sql.functions.explode(
           org.apache.spark.sql.functions.lit(probed.toArray)).as("cid"))
-    graft.sim.AnnStore.withBucketedScan(sp) {
+    GraftSession.withConf(sp, graft.sim.AnnStore.BucketedScan) {
       val df = graft.sim.AnnStore.s08ProbePlan(sp, Seq(tbl), q0, probed)
       val plan = physical(df)
       val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
